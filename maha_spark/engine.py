@@ -20,6 +20,7 @@ from .plans.binding import ParquetBinding, TableBinding
 from .plans.planner import Planner
 from .registry.cube import Registry
 from .request.request import ReportingRequest, parse_request
+from .session import state_for
 
 
 class MahaSparkEngine:
@@ -56,9 +57,6 @@ class MahaSparkEngine:
         residency, live op-scoped storage caches, binding DataFrame-memo
         entries, and the Spark storage layer's persisted-block count —
         everything needed to see cache behavior without a debugger."""
-        from .ops.common import _SCOPED_CACHES
-        from .plans.binding import _DF_CACHE
-
         try:
             n_rdds = int(self.spark.sparkContext._jsc
                          .getPersistentRDDs().size())
@@ -68,8 +66,7 @@ class MahaSparkEngine:
             "registry": self.registry_name,
             "resultCache": (self.result_cache.stats()
                             if self.result_cache is not None else None),
-            "scopedCaches": len(_SCOPED_CACHES),
-            "bindingCachedTables": len(_DF_CACHE),
+            **state_for(self.spark).stats(),
             "persistedRdds": n_rdds,
             "dryRunsLogged": len(self.dry_run_log),
         }
@@ -132,7 +129,16 @@ class MahaSparkEngine:
                 request_id: Optional[str] = None) -> dict[str, Any]:
         """Full lifecycle incl. curators -> reference JSON envelope.
         Routes through model() so revision A/B bucketing applies on the
-        primary execute path exactly as it does for dataframe()."""
+        primary execute path exactly as it does for dataframe().
+        The scoped caches this request's plans register are unpersisted
+        when it ends, and only those; the envelope is EAGER, so that is
+        safe."""
+        with state_for(self.spark).request_scope():
+            return self._execute(request, schema, today, user_id,
+                                 revision, request_id)
+
+    def _execute(self, request, schema, today, user_id, revision,
+                 request_id) -> dict[str, Any]:
         from .curators.curators import run_curators  # cycle-free local import
         from .log.request_log import (build_log_entry, new_request_id,
                                       now_ms, RequestLogEntry)
@@ -257,20 +263,6 @@ class MahaSparkEngine:
                     self.request_logger.log(entry)
                 except Exception:
                     pass  # the ledger never breaks serving
-            # the envelope above is EAGER (rows are materialized into the
-            # response), so any op-scoped storage blocks left on this
-            # session — the pipeline ops cache intermediate signature
-            # streams (ops/common.scoped_cache) and cannot unpersist
-            # their own lazy plans — are safe to drop here. A long-lived
-            # serving session would otherwise accumulate MEMORY_AND_DISK
-            # blocks across requests (bench.py releases per entry; this
-            # is the same hygiene on the serving path). Unpersist is
-            # semantics-free: a still-held lazy plan just recomputes.
-            try:
-                from .ops.common import release_scoped_caches
-                release_scoped_caches()
-            except Exception:
-                pass
 
     # ------------------------------------------------------------------
     def _spawn_dry_run(self, req: ReportingRequest, schema: str,
@@ -285,9 +277,10 @@ class MahaSparkEngine:
 
         def work() -> None:
             try:
-                df = self.dataframe(req, schema=schema, today=today,
-                                    revision=revision)
-                rec["rows"] = df.count()
+                with state_for(self.spark).request_scope():
+                    df = self.dataframe(req, schema=schema, today=today,
+                                        revision=revision)
+                    rec["rows"] = df.count()
                 rec["status"] = "COMPLETED"
             except Exception as e:  # shadow failure never affects serving
                 rec["status"] = "FAILED"

@@ -1417,8 +1417,8 @@ def ensure_udfs(spark) -> None:
     """Register the contract's UDFs once per session (the reference's
     registered-UDF statements prepended to generated queries,
     HiveQueryGeneratorCommon; SURVEY §2.10)."""
-    from ..functions import register_pandas_udf, registered_functions
-    if "py_reverse" in registered_functions(spark):
+    from ..functions import register_pandas_udf
+    if spark.catalog.functionExists("py_reverse"):
         return
     register_pandas_udf(
         spark, "py_reverse",
@@ -1426,21 +1426,18 @@ def ensure_udfs(spark) -> None:
         "string")
 
 
-# (session id, sf_dir, query name) -> planned DataFrame. A DataFrame is an
-# immutable logical plan: re-executing it recomputes values, so caching the
-# plan (like the reference caches generated SQL per registered request) is
-# semantics-free and skips registry build + validate + plan on repeats.
-_PLAN_CACHE: dict[tuple[int, str, str], object] = {}
-
-
 def run_query(spark, sf_dir: str, name: str):
-    """Execute one contract query through the full engine."""
-    import os
+    """Execute one contract query through the full engine. The planned
+    DataFrame is memoized in the session's engine state: a DataFrame is
+    an immutable logical plan, so re-executing it recomputes values, and
+    reusing it (like the reference caches generated SQL per registered
+    request) skips registry build + validate + plan on repeats."""
     from ..engine import engine_for_dir
-    key = (id(spark), sf_dir, name)
-    if os.environ.get("MAHA_SPARK_PLAN_CACHE", "1") == "1" \
-            and key in _PLAN_CACHE:
-        return _PLAN_CACHE[key]
+    from ..session import state_for
+    plans = state_for(spark).plans
+    key = (sf_dir, name)
+    if key in plans:
+        return plans[key]
     q = QUERIES.get(name) or OFFCONTRACT_QUERIES[name]
     ensure_udfs(spark)
     eng = engine_for_dir(spark, build_contract_registry(), sf_dir)
@@ -1455,7 +1452,7 @@ def run_query(spark, sf_dir: str, name: str):
             df = part if df is None else df.unionByName(part)
     else:
         df = eng.dataframe(q["request"])
-    _PLAN_CACHE[key] = df
+    plans[key] = df
     return df
 
 
@@ -1575,8 +1572,8 @@ def refresh_lineitem_rollup(spark, src_dir: str, dst_dir: str,
     if "dt" in li.columns:
         li = li.filter(F.col("dt").between(F.lit(from_day), F.lit(to_day)))
     out = os.path.join(dst_dir, "lineitem_daily")
-    # overwrite_day_partitions bumps the root mtime itself, so the
-    # binding's mtime-keyed memo (_DF_CACHE) rebuilds for every caller
+    # overwrite_day_partitions bumps the table version itself, so the
+    # session's binding memo rebinds for every caller
     overwrite_day_partitions(_lineitem_daily_frame(li), out)
     return out
 

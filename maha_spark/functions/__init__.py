@@ -14,9 +14,9 @@ Two registration paths:
 * ``register_pandas_udf`` - Arrow-batched vectorized UDF (10-100x faster;
                             the only acceptable Python hot path at scale).
 
-A ledger of registered functions feeds the domain document so clients can
-discover them (parity with the reference's registered-UDF statements
-prepended to generated queries, HiveQueryGeneratorCommon).
+Registered functions live in the session catalog for the session's
+lifetime; ``spark.catalog.functionExists(name)`` is how a caller asks
+whether one is there (``examples/contract.py::ensure_udfs`` does).
 """
 
 from __future__ import annotations
@@ -27,16 +27,12 @@ from pyspark.sql import SparkSession
 
 from .macros import MACROS, expand_macros
 
-#: (session id) -> {name: return_type} ledger
-_REGISTERED: dict[int, dict[str, str]] = {}
-
 
 def register_udf(spark: SparkSession, name: str, fn: Callable[..., Any],
                  return_type: str) -> None:
     """Register a row-at-a-time Python UDF under ``name``."""
     from pyspark.sql.functions import udf
     spark.udf.register(name, udf(fn, return_type))
-    _REGISTERED.setdefault(id(spark), {})[name] = return_type
 
 
 def register_pandas_udf(spark: SparkSession, name: str,
@@ -45,13 +41,6 @@ def register_pandas_udf(spark: SparkSession, name: str,
     ``fn`` takes/returns pandas Series."""
     from pyspark.sql.functions import pandas_udf
     spark.udf.register(name, pandas_udf(fn, return_type))
-    _REGISTERED.setdefault(id(spark), {})[name] = return_type
 
 
-def registered_functions(spark: SparkSession) -> dict[str, str]:
-    """name -> return type of functions registered through this module."""
-    return dict(_REGISTERED.get(id(spark), {}))
-
-
-__all__ = ["register_udf", "register_pandas_udf", "registered_functions",
-           "expand_macros", "MACROS"]
+__all__ = ["register_udf", "register_pandas_udf", "expand_macros", "MACROS"]

@@ -13,39 +13,34 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import active_session, state_for
+
 #: prime modulus for minhash permutations (fits 32 bits)
 MINHASH_P = 2147483647
 #: rolling-hash modulus
 ROLL_P = 1000000007
 
-#: live op-scoped caches (see scoped_cache) — module-level so a
-#: long-lived session can release them between jobs
-_SCOPED_CACHES: list[DataFrame] = []
-
 
 def scoped_cache(df: DataFrame) -> DataFrame:
     """``df.cache()`` with lifecycle tracking: the cached frame is
-    registered so ``release_scoped_caches`` can drop its storage blocks
-    once the op's plan has been consumed.
+    registered with the session's engine state so its storage blocks
+    are dropped once the op's plan has been consumed.
 
     The pipeline ops cache intermediate signature streams consumed by
     multiple branches of one returned plan; the plan is lazy, so the op
     itself cannot unpersist (the blocks must outlive the caller's
-    action). In a one-shot contract job the session exit reclaims them;
-    a LONG-LIVED serving session would accumulate MEMORY_AND_DISK blocks
-    instead — call ``release_scoped_caches()`` after consuming each
-    op's result (bench.py does, per entry)."""
-    df = df.cache()
-    _SCOPED_CACHES.append(df)
-    return df
+    action). Inside ``engine.execute`` the cache belongs to that request
+    and is released when it ends; outside any request it stays on the
+    session until ``release_scoped_caches()`` (bench.py calls it per
+    entry)."""
+    return state_for(df.sparkSession).scoped_cache(df)
 
 
 def release_scoped_caches() -> int:
-    """Unpersist every scoped cache (blocking); returns how many."""
-    n = len(_SCOPED_CACHES)
-    while _SCOPED_CACHES:
-        _SCOPED_CACHES.pop().unpersist(True)
-    return n
+    """Unpersist (blocking) the active session's scoped caches
+    registered outside any request; returns how many."""
+    spark = active_session()
+    return state_for(spark).release_scoped_caches() if spark else 0
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:
@@ -292,7 +287,3 @@ def dot_fold_sql(a: str, b: str, cast: str = "DOUBLE") -> str:
     return (f"aggregate(zip_with({a}, {b}, (p, q) -> "
             f"CAST(p AS {cast}) * CAST(q AS {cast})), "
             f"CAST(0 AS {cast}), (acc, t) -> acc + t)")
-
-
-def env_flag(name: str, default: str = "1") -> bool:
-    return os.environ.get(name, default) == "1"

@@ -340,11 +340,6 @@ def dedup_minhash_lsh_oracle() -> str:
 NGRAM_JACCARD_T = 0.7
 
 
-def _bigrams_spark(words: str) -> str:
-    return (f"array_distinct(transform(sequence(1, size({words}) - 1), "
-            f"i -> concat_ws(' ', {words}[i-1], {words}[i])))")
-
-
 def _bigrams_duck(words: str) -> str:
     return (f"list_distinct(list_transform(range(1, len({words})), "
             f"i -> {words}[i] || ' ' || {words}[i+1]))")

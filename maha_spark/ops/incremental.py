@@ -345,6 +345,8 @@ def dedup_incremental_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so results are bit-identical to the serial path).
     import threading
 
+    from pyspark import inheritable_thread_target
+
     from .common import scoped_cache
 
     batch = docs.filter(f"doc_id % {BATCH_MOD} = 0")
@@ -358,12 +360,9 @@ def dedup_incremental_op(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:  # noqa: BLE001 — cache miss just recomputes
             pass
 
-    try:
-        from pyspark import inheritable_thread_target
-        warm = threading.Thread(
-            target=inheritable_thread_target(_warm), daemon=True)
-    except ImportError:  # pragma: no cover - very old pyspark
-        warm = threading.Thread(target=_warm, daemon=True)
+    # the session argument carries the caller's job tags into the thread
+    warm = threading.Thread(
+        target=inheritable_thread_target(spark)(_warm), daemon=True)
     warm.start()
     try:
         materialize_dedup_index(

@@ -36,6 +36,7 @@ QUALITY_MIN = 0.42
 def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     import threading
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -54,8 +55,8 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per the guide) — so the composed action later reads them from
     # storage instead of recomputing them after the probe. Each cache
     # is consumed exactly once; it exists to shift the work into the
-    # probe's shadow, and release_scoped_caches reclaims it per
-    # request/entry as usual.
+    # probe's shadow, and its request scope (or release_scoped_caches)
+    # reclaims it as usual.
     prof = scoped_cache(text_profile(spark, sf_dir))
     cont = scoped_cache(contaminated_doc_ids(spark, sf_dir))
 
@@ -67,14 +68,11 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pass
         return run
 
-    try:
-        from pyspark import inheritable_thread_target
-        warms = [threading.Thread(
-            target=inheritable_thread_target(_warm(df)), daemon=True)
-            for df in (prof, cont)]
-    except ImportError:  # pragma: no cover - very old pyspark
-        warms = [threading.Thread(target=_warm(df), daemon=True)
-                 for df in (prof, cont)]
+    # the session argument carries the caller's job tags into the
+    # threads (PySpark 4 drops them with a warning otherwise)
+    warms = [threading.Thread(
+        target=inheritable_thread_target(spark)(_warm(df)), daemon=True)
+        for df in (prof, cont)]
     for w in warms:
         w.start()
     try:

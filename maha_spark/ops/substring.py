@@ -65,10 +65,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import state_for
 from .common import (duck_h60_sql, duck_words_sql, fs_delete, fs_exists,
                      fs_touch, h60_sql, load_table, persistent_rdd_ids,
-                     releases_checkpoints,
-                     release_new_persistent_rdds, release_scoped_caches,
+                     releases_checkpoints, release_new_persistent_rdds,
                      scoped_cache, words_sql)
 
 #: duplicated-window length in words — the minimum verbatim run the
@@ -572,7 +572,8 @@ def streaming_exsub_incremental(spark: SparkSession, docs_dir: str,
             update_exsub_index(s, index_dir, fresh, length=length,
                                assume_new=True)
         finally:
-            release_scoped_caches()
+            # the batch frames belong to the batch's own session object
+            state_for(s).release_scoped_caches()
             release_new_persistent_rdds(s, before)
 
     q = (spark.readStream.schema(DOC_SCHEMA).format("parquet")

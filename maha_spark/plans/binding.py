@@ -13,6 +13,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import state_for
+
 
 class TableBinding:
     def __init__(self, spark: SparkSession):
@@ -34,43 +36,6 @@ class TableBinding:
         return name in self._overrides
 
 
-# (spark-session id, path) -> (table version, cached DataFrame);
-# survives across the short-lived ParquetBinding instances the contract
-# queries create so a benchmark loop re-reads hot tables from Spark's
-# in-memory columnar cache. The version (plans/versioning.py: explicit
-# _table_version stamp, root mtime as the local-FS fallback) detects an
-# in-process rewrite: the stale cached DataFrame is unpersisted and
-# rebuilt. Every engine-maintained rewrite bumps the stamp
-# (overwrite_day_partitions and the delete/retention legs); external
-# writers must call bump_table_version themselves.
-_DF_CACHE: dict[tuple[int, str], tuple[float, DataFrame]] = {}
-
-
-def _mtime(path: str) -> float:
-    from .versioning import table_version
-    return table_version(path)
-
-
-def _df_cache_get(spark, path: str):
-    key = (id(spark), path)
-    hit = _DF_CACHE.get(key)
-    if hit is None:
-        return None
-    mt, df = hit
-    if mt != _mtime(path):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        del _DF_CACHE[key]
-        return None
-    return df
-
-
-def _df_cache_put(spark, path: str, df: DataFrame) -> DataFrame:
-    _DF_CACHE[(id(spark), path)] = (_mtime(path), df)
-    return df
-
 #: on-disk bytes ceiling for auto-caching a bound table (one of TWO
 #: gates — see CACHE_MAX_ROWS_DEFAULT for the row-count gate). Dims and
 #: small tables stay hot; an unbounded fact is NEVER cached by default —
@@ -85,19 +50,9 @@ def _cache_max_bytes() -> int:
                               CACHE_MAX_BYTES_DEFAULT))
 
 
-#: (path, root mtime) -> on-disk bytes — a dt-partitioned fact has
-#: thousands of files and the size gate must not re-walk them per
-#: table() call; keying on the root mtime invalidates the memo when the
-#: table is rewritten in-process (an overwrite updates the directory)
-_PATH_BYTES_CACHE: dict[tuple[str, float], int] = {}
-
-
 def _path_bytes(path: str) -> int:
     """Total on-disk bytes of a parquet file or directory tree (cheap
-    metadata walk; no data read). Memoized per (path, version)."""
-    key = (path, _mtime(path))
-    if key in _PATH_BYTES_CACHE:
-        return _PATH_BYTES_CACHE[key]
+    metadata walk; no data read)."""
     if os.path.isfile(path):
         total = os.path.getsize(path)
     else:
@@ -110,7 +65,6 @@ def _path_bytes(path: str) -> int:
                     total += os.path.getsize(os.path.join(root, f))
                 except OSError:
                     pass
-    _PATH_BYTES_CACHE[key] = total
     return total
 
 
@@ -135,9 +89,6 @@ CACHE_MAX_ROWS_DEFAULT = 200_000_000
 #: spaced files bound the metadata reads on a 2500-file layout
 _ROWS_SAMPLE_FILES = 8
 
-#: (path, root mtime) -> estimated total rows
-_EST_ROWS_CACHE: dict[tuple[str, float], int] = {}
-
 
 def _cache_max_rows() -> int:
     return int(os.environ.get("MAHA_SPARK_CACHE_MAX_ROWS",
@@ -151,9 +102,6 @@ def _est_rows(path: str) -> int:
     single file; on a multi-file tree the rows-per-byte of the sample is
     applied to the total tree size. Unreadable/non-parquet paths
     estimate 0 (the disk-bytes gate still applies)."""
-    key = (path, _mtime(path))
-    if key in _EST_ROWS_CACHE:
-        return _EST_ROWS_CACHE[key]
     if os.path.isfile(path):
         files = [path]
     else:
@@ -183,7 +131,6 @@ def _est_rows(path: str) -> int:
         rows = 0  # fall back to the disk-bytes gate alone
     if rows and not full and sampled_bytes:
         rows = int(rows / sampled_bytes * total_bytes)
-    _EST_ROWS_CACHE[key] = rows
     return rows
 
 
@@ -193,8 +140,14 @@ def _should_cache(path: str) -> bool:
             and _est_rows(path) <= _cache_max_rows())
 
 
+def _gate_cache(path: str, df: DataFrame) -> DataFrame:
+    return df.cache() if _should_cache(path) else df
+
+
 class ParquetBinding(TableBinding):
-    """Reads ``{base_dir}/{name}.parquet``; falls back to a catalog table."""
+    """Reads ``{base_dir}/{name}.parquet``; falls back to a catalog table.
+    Bound DataFrames are memoized per table version (plans/versioning.py)
+    in the session's ``EngineState``, shared by every binding on it."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         super().__init__(spark)
@@ -208,27 +161,16 @@ class ParquetBinding(TableBinding):
         # so the planner's day bound becomes a PartitionFilter
         pdir = os.path.join(self.base_dir, name)
         if os.path.isdir(pdir):
-            hit = _df_cache_get(self.spark, pdir)
-            if hit is not None:  # hit: skip the size-gate metadata walk
-                return hit
-            df = normalize_timestamps(self.spark.read.parquet(pdir))
-            if _should_cache(pdir):
-                df = df.cache()
-            # memoize even when NOT persisting: reusing the DataFrame
+            # memoized even when NOT persisting: reusing the DataFrame
             # reuses its resolved FileIndex, so partition discovery over
-            # a 2500-directory dt layout runs once per session, not once
-            # per query (unpersist on an unpersisted df is a no-op, so
-            # the mtime invalidation path needs no cached/uncached split)
-            return _df_cache_put(self.spark, pdir, df)
+            # a 2500-directory dt layout runs once per table version,
+            # not once per query
+            return state_for(self.spark).table(pdir, lambda: _gate_cache(
+                pdir, normalize_timestamps(self.spark.read.parquet(pdir))))
         path = os.path.join(self.base_dir, f"{name}.parquet")
         if os.path.exists(path):
-            hit = _df_cache_get(self.spark, path)
-            if hit is not None:
-                return hit
-            df = self._read_parquet(path)
-            if _should_cache(path):
-                df = df.cache()
-            return _df_cache_put(self.spark, path, df)
+            return state_for(self.spark).table(path, lambda: _gate_cache(
+                path, self._read_parquet(path)))
         return self.spark.table(name)
 
     def table_path(self, name: str) -> Optional[str]:

@@ -53,14 +53,6 @@ import time
 
 VERSION_FILE = "_table_version"
 
-#: (applicationId, scheme, authority) -> configured private FileSystem.
-#: The binding memo probes ``table_version`` on EVERY table access, so
-#: URI-rooted serving would otherwise pay a JVM newInstance+close
-#: round-trip per request per table. The checksum flags are set once at
-#: creation, so a cached private instance is exactly as safe as a fresh
-#: one; keying on applicationId drops instances from dead SparkContexts.
-_FS_CACHE: dict[tuple, object] = {}
-
 
 def _stamp_path(table_dir: str) -> str:
     # URI paths keep their own separator; os.path.join is correct for
@@ -88,34 +80,26 @@ def _hadoop_fs(path: str):
     checksum flags mutated under Spark's feet, and on LocalFileSystem a
     checksummed stamp write leaves a ``.crc`` sidecar that poisons
     reads after any plain-POSIX rewrite of the same stamp (the two
-    spellings must interoperate). The instance is memoized per
-    (applicationId, scheme, authority) in ``_FS_CACHE`` and stays open
-    for the SparkContext's lifetime — callers must NOT close it."""
+    spellings must interoperate). The binding memo probes
+    ``table_version`` on EVERY table access, so the instance is memoized
+    per (scheme, authority) in ``EngineState.filesystems`` and stays
+    open for the session's lifetime — callers must NOT close it."""
+    from ..session import active_session, state_for
     try:
-        from pyspark.sql import SparkSession
-        # getActiveSession is THREAD-LOCAL (a JVM InheritableThreadLocal
-        # the py4j callback thread never inherits): a stamp probe from a
-        # serving worker thread would silently get no gateway and report
-        # -1.0 — fall back to the instantiated session
-        spark = (SparkSession.getActiveSession()
-                 or getattr(SparkSession, "_instantiatedSession", None))
+        spark = active_session()
         if spark is None:
             return None, None
         jvm = spark._jvm
         uri = jvm.java.net.URI.create(path)
-        key = (spark.sparkContext.applicationId,
-               uri.getScheme(), uri.getAuthority())
-        fs = _FS_CACHE.get(key)
+        cache = state_for(spark).filesystems
+        key = (uri.getScheme(), uri.getAuthority())
+        fs = cache.get(key)
         if fs is None:
             fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(
                 uri, spark._jsc.hadoopConfiguration())
             fs.setVerifyChecksum(False)
             fs.setWriteChecksum(False)
-            for stale in [k for k in _FS_CACHE if k[0] != key[0]]:
-                # a dead SparkContext's gateway objects are unusable;
-                # drop them without close() (the JVM is gone with them)
-                _FS_CACHE.pop(stale, None)
-            _FS_CACHE[key] = fs
+            fs = cache.setdefault(key, fs)
         return fs, jvm
     except Exception:
         return None, None
@@ -234,9 +218,9 @@ def _rename_overwrite(jvm, src: str, dst: str, root: str) -> bool:
     read-side re-probe covers)."""
     try:
         from pyspark import SparkContext
-        from pyspark.sql import SparkSession
-        spark = (SparkSession.getActiveSession()
-                 or getattr(SparkSession, "_instantiatedSession", None))
+
+        from ..session import active_session
+        spark = active_session()
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
             jvm.java.net.URI.create(root),
             spark._jsc.hadoopConfiguration())

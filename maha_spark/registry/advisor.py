@@ -461,6 +461,26 @@ def _covers(cand_chains: dict, sig: GrainSignature, registry) -> bool:
     return True
 
 
+def ledger_models(engine, entries: Iterable[Any], today=None):
+    """The ledger pass every advisor shares: the ``RequestModel`` of
+    each entry (``RequestLogEntry``, its ``to_dict()`` or raw request
+    JSON) through the live registry. Requests that no longer model
+    (schema drift) are skipped, never fatal."""
+    for e in entries:
+        raw = e if isinstance(e, (str, bytes, dict)) else None
+        if raw is None:
+            raw = getattr(e, "json_request", None)
+        elif isinstance(raw, dict) and "json_request" in raw:
+            raw = raw["json_request"]
+        if not raw:
+            continue
+        try:
+            model = engine.model(raw, today=today)
+        except Exception:
+            continue
+        yield model
+
+
 def recommend_rollups(engine, entries: Iterable[Any], *, top_n: int = 3,
                       max_rows_frac: float = 0.5,
                       today=None,
@@ -486,20 +506,7 @@ def recommend_rollups(engine, entries: Iterable[Any], *, top_n: int = 3,
     """
     registry = engine.registry
     sigs: list[tuple[GrainSignature, Any]] = []
-    for e in entries:
-        raw = e if isinstance(e, (str, bytes, dict)) else None
-        if raw is None:
-            raw = getattr(e, "json_request", None)
-        elif isinstance(raw, dict) and "json_request" in raw:
-            raw = raw["json_request"]
-        if not raw:
-            continue
-        try:
-            model = engine.model(raw, today=today)
-        except Exception:
-            # stale/invalid logged requests (schema drift, removed
-            # aliases) must not abort workload mining
-            continue
+    for model in ledger_models(engine, entries, today):
         req = model.request
         if (req.query_type != "groupby" or model.utc_shifted
                 or model.is_dim_driven or model.is_dim_only):

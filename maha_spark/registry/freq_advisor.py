@@ -50,15 +50,6 @@ class FreqTopkRecommendation:
                 f"-> store k'={self.kprime}/day")
 
 
-def _raw_of(e: Any) -> Optional[Any]:
-    raw = e if isinstance(e, (str, bytes, dict)) else None
-    if raw is None:
-        raw = getattr(e, "json_request", None)
-    elif isinstance(raw, dict) and "json_request" in raw:
-        raw = raw["json_request"]
-    return raw or None
-
-
 def recommend_freq_topk(engine, entries: Iterable[Any], *,
                         top_n: int = 3, min_count: int = 2,
                         max_page: int = 100,
@@ -79,16 +70,10 @@ def recommend_freq_topk(engine, entries: Iterable[Any], *,
     ``RequestLogEntry`` objects / dicts / raw JSON; requests that no
     longer model are skipped, never fatal."""
     from ..core.columns import DimCol
+    from .advisor import ledger_models
 
     counts: dict[tuple[str, str, str], list] = {}
-    for e in entries:
-        raw = _raw_of(e)
-        if not raw:
-            continue
-        try:
-            model = engine.model(raw, today=today)
-        except Exception:
-            continue
+    for model in ledger_models(engine, entries, today):
         if model.chains or model.is_dim_only or model.request_distinct:
             continue
         if not (0 < model.max_rows <= max_page):

@@ -79,22 +79,11 @@ def recommend_skipping_indexes(engine, entries: Iterable[Any], *,
     from ..core.filters import (BetweenFilter, EqualityFilter,
                                 GreaterThanFilter, InFilter, IsNullFilter,
                                 LessThanFilter)
+    from .advisor import ledger_models
     needle_types = (EqualityFilter, InFilter, GreaterThanFilter,
                     LessThanFilter, BetweenFilter, IsNullFilter)
     counts: dict[tuple[str, str], list] = {}
-    for e in entries:
-        raw = e if isinstance(e, (str, bytes, dict)) else None
-        if raw is None:
-            raw = getattr(e, "json_request", None)
-        elif isinstance(raw, dict) and "json_request" in raw:
-            raw = raw["json_request"]
-        if not raw:
-            continue
-        try:
-            model = engine.model(raw, today=today)
-        except Exception:
-            # stale/invalid logged requests must not abort mining
-            continue
+    for model in ledger_models(engine, entries, today):
         table = model.fact_table
         parts = set(table.partition_columns or ())
         for f in model.fact_filters:

@@ -23,7 +23,6 @@ from __future__ import annotations
 import re
 from typing import Any, Optional
 
-from .request import ReportingRequest, parse_request
 
 _TOKEN_RE = re.compile(r"""
     \s*(?:
@@ -255,9 +254,3 @@ def sql_to_request_json(sql: str,
     if p.peek()[0] != "eof":
         raise SqlParseError(f"trailing tokens at {p.peek()[1]!r}")
     return req
-
-
-def parse_sql(sql: str, schema: str = "internal",
-              star_fields: Optional[list[str]] = None) -> ReportingRequest:
-    return parse_request(sql_to_request_json(sql, star_fields),
-                         schema=schema)

@@ -1,4 +1,5 @@
-"""SparkSession helper with scale-aware defaults.
+"""SparkSession helper with scale-aware defaults, and the engine state
+each session owns.
 
 Local tests run on local[N]; the same config keys are what you would tune
 on a 1000-executor cluster (AQE on, partition sizing, broadcast threshold).
@@ -7,8 +8,12 @@ on a 1000-executor cluster (AQE on, partition sizing, broadcast threshold).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Callable, Iterator, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "maha-spark", master: str | None = None,
@@ -108,3 +113,136 @@ def get_spark(app_name: str = "maha-spark", master: str | None = None,
             .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
                     "mahaspark.fs.FastLocalFs"))
     return builder.getOrCreate()
+
+
+def active_session() -> Optional[SparkSession]:
+    """The session a caller without one in hand means: the thread's
+    active session, else the process's instantiated one.
+    ``getActiveSession`` is thread-local (a JVM InheritableThreadLocal
+    that pool and py4j callback threads never inherit), so a serving
+    worker thread would otherwise see no session at all."""
+    return (SparkSession.getActiveSession()
+            or getattr(SparkSession, "_instantiatedSession", None))
+
+
+#: the running request's engine state and scoped caches
+#: (``EngineState.request_scope``)
+_REQUEST_CACHES: ContextVar[Optional[tuple]] = ContextVar(
+    "maha_spark_request_caches", default=None)
+
+
+def state_for(spark: SparkSession) -> "EngineState":
+    """The engine state owned by ``spark``: an attribute of the session
+    object, so it dies with the session and a new session never sees an
+    old session's entries (README "Engine state")."""
+    st = getattr(spark, "_maha_state", None)
+    if st is None:  # setdefault: one winner if two threads get here
+        st = spark.__dict__.setdefault("_maha_state", EngineState())
+    return st
+
+
+class EngineState:
+    """Every cache the engine keeps for one SparkSession: bound tables
+    (``table``), planned contract DataFrames (``plans``), private Hadoop
+    FileSystems (``filesystems``) and scoped caches, per request inside
+    ``request_scope`` and per session outside it."""
+
+    def __init__(self) -> None:
+        self._tables_lock = threading.Lock()
+        self._caches_lock = threading.Lock()
+        self._tables: dict[str, tuple[float, DataFrame]] = {}
+        self._session_caches: list[tuple[int, DataFrame]] = []
+        #: plan semantic hash -> live scoped-cache registrations
+        self._holders: dict[int, int] = {}
+        self.plans: dict[tuple[str, str], DataFrame] = {}
+        self.filesystems: dict[tuple, object] = {}
+
+    def table(self, path: str, read: Callable[[], DataFrame]) -> DataFrame:
+        """The DataFrame bound for ``path`` at its current version,
+        built by ``read`` on a miss. The version is read BEFORE ``read``
+        lists the files, so a rewrite landing during the read leaves the
+        entry stale and the next call reads again. One lock covers
+        lookup, read and insert: each version gets one DataFrame, and
+        the stale entry is unpersisted before the new one caches (Spark
+        matches cached plans, not versions)."""
+        from .plans.versioning import table_version
+        version = table_version(path)
+        with self._tables_lock:
+            hit = self._tables.get(path)
+            if hit is not None:
+                if hit[0] == version:
+                    return hit[1]
+                _unpersist(hit[1])
+                del self._tables[path]
+            df = read()
+            self._tables[path] = (version, df)
+            return df
+
+    def scoped_cache(self, df: DataFrame) -> DataFrame:
+        """``df.cache()``, registered with the running request (whose
+        state counts it) or, outside any request, with this session."""
+        df = df.cache()
+        key = df.semanticHash()
+        scope = _REQUEST_CACHES.get()
+        owner = self if scope is None else scope[0]
+        with owner._caches_lock:
+            (owner._session_caches if scope is None else scope[1]).append(
+                (key, df))
+            owner._holders[key] = owner._holders.get(key, 0) + 1
+        return df
+
+    def _release(self, caches: list[tuple[int, DataFrame]]) -> None:
+        """Unpersist (blocking) each cache that no other registration
+        still holds. Spark keeps one cache entry per plan, shared by
+        equal plans of concurrent requests; dropping it under a request
+        that already planned against it makes that request rebuild the
+        blocks as an RDD nothing ever unpersists."""
+        with self._caches_lock:
+            for key, df in caches:
+                self._holders[key] -= 1
+                if not self._holders[key]:
+                    del self._holders[key]
+                    _unpersist(df, blocking=True)
+
+    @contextmanager
+    def request_scope(self) -> Iterator[None]:
+        """Run a request: caches registered inside it, from any thread
+        that carries this context, are unpersisted when it ends."""
+        scope: list[tuple[int, DataFrame]] = []
+        token = _REQUEST_CACHES.set((self, scope))
+        try:
+            yield
+        finally:
+            _REQUEST_CACHES.reset(token)
+            self._release(scope)
+
+    def release_scoped_caches(self) -> int:
+        """Unpersist (blocking) the scoped caches registered outside any
+        request; returns how many."""
+        with self._caches_lock:
+            drained, self._session_caches = self._session_caches, []
+        self._release(drained)
+        return len(drained)
+
+    def stats(self) -> dict[str, int]:
+        with self._caches_lock:
+            scoped = sum(self._holders.values())
+        return {"scopedCaches": scoped,
+                "bindingCachedTables": len(self._tables)}
+
+    def clear(self) -> None:
+        """Drop the bound tables (unpersisting them), the planned
+        DataFrames and the scoped caches outside any request."""
+        with self._tables_lock:
+            tables, self._tables = list(self._tables.values()), {}
+        self.plans.clear()
+        for _version, df in tables:
+            _unpersist(df, blocking=True)
+        self.release_scoped_caches()
+
+
+def _unpersist(df: DataFrame, blocking: bool = False) -> None:
+    try:
+        df.unpersist(blocking)
+    except Exception:
+        pass  # a dead session's frames hold nothing to free

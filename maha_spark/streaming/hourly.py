@@ -82,24 +82,6 @@ def hourly_stream(spark: SparkSession, events_dir: str,
             .select(*outs))
 
 
-def run_available_now(spark: SparkSession, sf_dir: str,
-                      table_name: str = "stream_hourly") -> DataFrame:
-    """DEBUG-ONLY harness: drain the backlog into an in-memory sink with
-    complete mode. Driver-side state — never the scale path (that is
-    ``drain_append``, a parquet sink in append mode)."""
-    agg = hourly_stream(spark, sf_dir, glob="events.parquet")
-    with tempfile.TemporaryDirectory(prefix="maha-ckpt-") as ckpt:
-        q = (agg.writeStream
-             .format("memory")
-             .queryName(table_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    return spark.table(table_name)
-
-
 class bounded_shuffle:
     """Temporarily bound ``spark.sql.shuffle.partitions`` for a streaming
     drain. One state-store instance (plus, for stateful Pandas ops, one

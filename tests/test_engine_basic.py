@@ -424,16 +424,30 @@ def test_additional_column_info_value_injection_rejected(spark):
         reset_ctx_replacements(tok)
 
 
-def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir):
-    """Serving-path cache hygiene: op-scoped storage blocks (the
-    pipeline ops cache intermediate signature streams their lazy plans
-    cannot unpersist) are drained by engine.execute's finally, so a
-    long-lived REST/engine session does not accumulate MEMORY_AND_DISK
-    blocks across requests."""
+CROSS_CHAIN_REQ = {
+    "cube": "lineitem_stats",
+    "selectFields": [{"field": "Nation Name"},
+                     {"field": "Supplier Nation Name"}],
+    "filterExpressions": [{"field": "Day", "operator": "between",
+                           "from": "1995-01-01", "to": "2001-12-31"}],
+    "distinct": True,
+}
+
+
+def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir,
+                                               monkeypatch):
+    """Serving-path cache hygiene, per request: the scoped caches a
+    request's own plans register (the dim-only cross-chain distinct
+    sets) are dropped when that request ends, so a long-lived REST/
+    engine session does not accumulate MEMORY_AND_DISK blocks. Caches
+    an op registers OUTSIDE any request belong to the session: another
+    request leaves them alone, and release_scoped_caches() drains
+    them."""
     import json
 
     from maha_spark.ops import common as ops_common
     from maha_spark.ops.dedup import dedup_simhash_pairs
+    from maha_spark.session import state_for
 
     req = json.dumps({
         "cube": "lineitem_stats",
@@ -441,6 +455,8 @@ def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir):
         "filterExpressions": [{"field": "Day", "operator": "between",
                                "from": "1995-01-01", "to": "1995-01-31"}],
     })
+    cross = json.dumps(CROSS_CHAIN_REQ)
+    state = state_for(spark)
 
     def n_cached() -> int:
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -449,18 +465,75 @@ def test_engine_execute_releases_scoped_caches(spark, engine, sf_dir):
     # the binding layer's bounded small-table cache, which the op's
     # documents load populates), then baseline the JVM storage count
     assert engine.execute(req)["rows"]
+    assert engine.execute(cross)["rows"]
     dedup_simhash_pairs(spark, sf_dir).count()
     ops_common.release_scoped_caches()
     n0 = n_cached()
 
-    dedup_simhash_pairs(spark, sf_dir).count()   # registers a scoped cache
-    assert len(ops_common._SCOPED_CACHES) > 0
-    assert n_cached() > n0
+    registered = []
+    orig = ops_common.scoped_cache
+    monkeypatch.setattr(ops_common, "scoped_cache",
+                        lambda df: registered.append(df) or orig(df))
+    assert engine.execute(cross)["rows"]
+    assert len(registered) == 2           # one per chain's distinct set
+    assert state.stats()["scopedCaches"] == 0
+    assert n_cached() == n0               # blocking unpersist: blocks gone
 
+    dedup_simhash_pairs(spark, sf_dir).count()   # outside any request
+    held = state.stats()["scopedCaches"]
+    assert held > 0 and n_cached() > n0
     assert engine.execute(req)["rows"]
-    assert ops_common._SCOPED_CACHES == []
-    # blocking unpersist: the op's JVM storage blocks are gone too
+    assert state.stats()["scopedCaches"] == held
+    assert ops_common.release_scoped_caches() == held
+    assert state.stats()["scopedCaches"] == 0
     assert n_cached() == n0
+
+
+def test_request_keeps_concurrent_requests_caches(spark, engine,
+                                                  monkeypatch):
+    """One request ending never unpersists another request's in-flight
+    caches: thread 1 holds a scoped cache mid-request while thread 2
+    completes engine.execute; thread 1's cache stays persisted until
+    thread 1's own request ends."""
+    import json
+    import threading
+
+    from maha_spark.ops import common as ops_common
+
+    held, resume = threading.Event(), threading.Event()
+    mine: list = []
+    orig = ops_common.scoped_cache
+
+    def hold_first(df):
+        df = orig(df)
+        if threading.current_thread().name == "holder" and not mine:
+            mine.append(df)
+            held.set()
+            resume.wait(120)
+        return df
+
+    monkeypatch.setattr(ops_common, "scoped_cache", hold_first)
+    out: dict = {}
+    t = threading.Thread(name="holder", target=lambda: out.setdefault(
+        "envelope", engine.execute(json.dumps(CROSS_CHAIN_REQ))))
+    t.start()
+    try:
+        assert held.wait(120)
+        assert engine.execute(json.dumps({
+            "cube": "lineitem_stats",
+            "selectFields": [{"field": "Return Flag"},
+                             {"field": "Revenue"}],
+            "filterExpressions": [{"field": "Day", "operator": "between",
+                                   "from": "1995-01-01",
+                                   "to": "1995-01-31"}],
+        }))["rows"]
+        assert mine[0].storageLevel.useMemory
+    finally:
+        resume.set()
+        t.join(120)
+    assert not t.is_alive()
+    assert out["envelope"]["rows"]
+    assert not mine[0].storageLevel.useMemory
 
 
 def test_dim_only_cross_chain_cardinality_guard(spark, engine, monkeypatch):
@@ -475,14 +548,7 @@ def test_dim_only_cross_chain_cardinality_guard(spark, engine, monkeypatch):
     from maha_spark.plans import planner as planner_mod
     from maha_spark.request.request import ValidationError
 
-    req = json.dumps({
-        "cube": "lineitem_stats",
-        "selectFields": [{"field": "Nation Name"},
-                         {"field": "Supplier Nation Name"}],
-        "filterExpressions": [{"field": "Day", "operator": "between",
-                               "from": "1995-01-01", "to": "2001-12-31"}],
-        "distinct": True,
-    })
+    req = json.dumps(CROSS_CHAIN_REQ)
     # within the default cap the product is the request's semantics
     assert engine.dataframe(req).count() > 0
     monkeypatch.setattr(planner_mod, "DIM_ONLY_CROSS_MAX", 3)

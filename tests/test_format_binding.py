@@ -78,7 +78,7 @@ def test_cube_query_over_json_binding(spark, tmp_path, engine):
     assert got == exp and len(got) > 0
 
 
-def test_cache_policy_size_gated(spark, monkeypatch):
+def test_cache_policy_size_gated(spark, monkeypatch, tmp_path):
     """Auto-cache is gated on disk bytes AND estimated row count: small
     tables (dims) stay hot, a table over either cap is NEVER cached — at
     cluster scale caching an unbounded fact would evict/thrash the whole
@@ -87,15 +87,16 @@ def test_cache_policy_size_gated(spark, monkeypatch):
     parquet reader outright (tools/bench_probes/attrib_r6.json)."""
     from maha_spark.plans import binding as b
 
-    lp = "/root/testdata/sf0.01/lineitem.parquet"
-    np_ = "/root/testdata/sf0.01/nation.parquet"
-    # start from a clean memo: an earlier module may have bound either
-    # table under the default (permissive) caps
-    for p in (lp, np_):
-        hit = b._DF_CACHE.pop((id(spark), p), None)
-        if hit is not None:
-            hit[1].unpersist(blocking=True)
-    pb = b.ParquetBinding(spark, "/root/testdata/sf0.01")
+    # links to the tables under fresh paths: neither the session's
+    # binding memo nor Spark's plan-matched cache has seen them, so both
+    # binds below run the gate (an earlier module may have bound the
+    # originals under the default, permissive caps)
+    for t in ("lineitem", "nation"):
+        os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
+                   tmp_path / f"{t}.parquet")
+    lp = str(tmp_path / "lineitem.parquet")
+    np_ = str(tmp_path / "nation.parquet")
+    pb = b.ParquetBinding(spark, str(tmp_path))
     monkeypatch.setenv("MAHA_SPARK_CACHE", "1")
     # rows cap below lineitem's count but above nation's (footer-exact
     # for single files)
@@ -112,11 +113,7 @@ def test_cache_policy_size_gated(spark, monkeypatch):
     monkeypatch.setenv("MAHA_SPARK_CACHE_MAX_BYTES",
                        str(b._path_bytes(lp) - 1))
     assert not b._should_cache(lp)
-    # drop BOTH memo entries: they were built under this test's tiny cap
-    # (an uncached lineitem memo would otherwise stick for the session)
     dim.unpersist()
-    for p in (lp, np_):
-        b._DF_CACHE.pop((id(spark), p), None)
 
 
 def test_est_rows_sees_through_rle_compression(spark, tmp_path):

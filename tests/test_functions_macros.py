@@ -11,7 +11,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from maha_spark.functions import (  # noqa: E402
-    register_pandas_udf, register_udf, registered_functions,
+    register_pandas_udf, register_udf,
 )
 from maha_spark.functions.macros import expand_macros  # noqa: E402
 from maha_spark.request.request import ValidationError  # noqa: E402
@@ -123,7 +123,7 @@ def test_register_udf_row_at_a_time(spark):
     register_udf(spark, "t_double_it", lambda x: None if x is None else x * 2,
                  "bigint")
     assert spark.sql("SELECT t_double_it(21) AS v").collect()[0].v == 42
-    assert "t_double_it" in registered_functions(spark)
+    assert spark.catalog.functionExists("t_double_it")
 
 
 def test_register_pandas_udf_vectorized(spark):

@@ -29,10 +29,8 @@ def contract_engine(spark):
     # substitutes ANY matching plan with a cached one, so tables cached by
     # earlier test modules must be unpersisted too.
     os.environ["MAHA_SPARK_CACHE"] = "0"
-    from maha_spark.plans.binding import _DF_CACHE
-    for _mt, df in _DF_CACHE.values():
-        df.unpersist(blocking=True)
-    _DF_CACHE.clear()
+    from maha_spark.session import state_for
+    state_for(spark).clear()
     from maha_spark.engine import engine_for_dir
     from maha_spark.examples.contract import build_contract_registry
     yield engine_for_dir(spark, build_contract_registry(),
@@ -469,10 +467,8 @@ def test_q5_via_nation_rollup_never_touches_orders_or_customer(
         for t in os.listdir(src):
             os.symlink(os.path.join(src, t), os.path.join(d, t))
         materialize_lineitem_nation_rollup(spark, src, d)
-        from maha_spark.plans.binding import _DF_CACHE
-        for _mt, cdf in _DF_CACHE.values():
-            cdf.unpersist(blocking=True)
-        _DF_CACHE.clear()
+        from maha_spark.session import state_for
+        state_for(spark).clear()
         eng = engine_for_dir(spark, build_contract_registry(), d)
         df = eng.dataframe({
             "cube": "tpch",
@@ -510,10 +506,8 @@ def test_q4_via_segment_rollup_filter_pushed_no_customer_join(
         for t in os.listdir(src):
             os.symlink(os.path.join(src, t), os.path.join(d, t))
         materialize_lineitem_nation_rollup(spark, src, d)
-        from maha_spark.plans.binding import _DF_CACHE
-        for _mt, cdf in _DF_CACHE.values():
-            cdf.unpersist(blocking=True)
-        _DF_CACHE.clear()
+        from maha_spark.session import state_for
+        state_for(spark).clear()
         eng = engine_for_dir(spark, build_contract_registry(), d)
         df = eng.dataframe({
             "cube": "tpch",

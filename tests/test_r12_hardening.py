@@ -1,7 +1,7 @@
 """Round-12 hardening pins:
 
-1. the Hadoop FileSystem gateway is CACHED per (app, scheme,
-   authority) — the binding memo probes ``table_version`` on every
+1. the Hadoop FileSystem gateway is CACHED per (scheme, authority)
+   in the session's engine state — the binding memo probes ``table_version`` on every
    table access, so URI-rooted serving must not pay a JVM
    newInstance+close round-trip per request per table;
 2. stamp bumps use a writer-unique tmp + overwrite-capable rename —
@@ -38,6 +38,7 @@ from maha_spark.plans.maintenance import (MaintenanceCycleError,  # noqa: E402
                                           run_maintenance_cycle)
 from maha_spark.plans.versioning import (bump_table_version,  # noqa: E402
                                          table_version)
+from maha_spark.session import state_for  # noqa: E402
 
 
 # ------------------------------------------------ cached FS gateway
@@ -48,18 +49,19 @@ def test_fs_gateway_cached_per_scheme_authority(spark, tmp_path):
     d = tmp_path / "tbl"
     d.mkdir()
     uri = "file://" + str(d)
-    versioning._FS_CACHE.clear()
+    filesystems = state_for(spark).filesystems
+    filesystems.clear()
     assert bump_table_version(uri) > 0
-    assert len(versioning._FS_CACHE) == 1
+    assert len(filesystems) == 1
     fs1, _ = versioning._hadoop_fs(uri)
     for _ in range(5):
         table_version(uri)
     fs2, _ = versioning._hadoop_fs(uri)
     assert fs1 is fs2
-    assert len(versioning._FS_CACHE) == 1
+    assert len(filesystems) == 1
     # a different path under the same (scheme, authority) shares it
     fs3, _ = versioning._hadoop_fs("file://" + str(tmp_path))
-    assert fs3 is fs1 and len(versioning._FS_CACHE) == 1
+    assert fs3 is fs1 and len(filesystems) == 1
 
 
 # --------------------------------------------- atomic stamp bumps

@@ -285,3 +285,36 @@ def test_unmaterialized_rollup_candidates_do_not_bypass(spark):
     k_present = cache.key_for(model, _Probe(), req, "internal",
                               dt.date(2002, 1, 1), "maha")
     assert k_absent != k_present
+
+
+def test_concurrent_get_put_is_safe_and_counts_every_get():
+    """8 threads hammer a 4-entry cache with get/put over 12 keys, so
+    puts evict keys other threads are reading: no exception, the cache
+    stays bounded, and every get is counted once as a hit or a miss."""
+    import random
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    cache = ResultCache(max_entries=4)
+    rounds = 2000
+    gate = threading.Barrier(8)
+
+    def client(seed: int) -> None:
+        rng = random.Random(seed)
+        gate.wait()
+        for _ in range(rounds):
+            key = ("k", rng.randrange(12))
+            if cache.get(key) is None:
+                cache.put(key, {"rows": [[key[1]]]})
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)   # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            for f in [ex.submit(client, s) for s in range(8)]:
+                f.result()
+    finally:
+        sys.setswitchinterval(interval)
+    st = cache.stats()
+    assert st["hits"] + st["misses"] == 8 * rounds
+    assert st["entries"] <= 4 and st["evictions"] > 0

@@ -113,12 +113,8 @@ def main() -> None:
             "runs": runs,
         }
         # drop this tier's caches before the next (bench protocol)
-        from maha_spark.examples import contract as _c
-        from maha_spark.ops import common as _oc
-        from maha_spark.plans import binding as _b
-        _b._DF_CACHE.clear()
-        _c._PLAN_CACHE.clear()
-        _oc.release_scoped_caches()
+        from maha_spark.session import state_for
+        state_for(spark).clear()
         spark.catalog.clearCache()
 
     # committed round points for direct comparison

@@ -9,18 +9,12 @@ import shutil
 import sys
 import time
 
-# each timed pass must REBUILD the plan (the page-key collect and the
-# sidecar probe are part of the serving cost being measured) — the
-# contract module's DataFrame memo would otherwise serve one variant's
-# plan to the other
-os.environ["MAHA_SPARK_PLAN_CACHE"] = "0"
-
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
-from maha_spark.session import get_spark  # noqa: E402
+from maha_spark.session import get_spark, state_for  # noqa: E402
 
 
 def main() -> None:
@@ -36,6 +30,11 @@ def main() -> None:
     def run(tag: str, passes: int = 3) -> list[float]:
         times = []
         for _ in range(passes):
+            # each timed pass must REBUILD the plan (the page-key collect
+            # and the sidecar probe are part of the serving cost being
+            # measured) — the session's plan memo would otherwise serve
+            # one variant's plan to the other
+            state_for(spark).plans.clear()
             t0 = time.perf_counter()
             contract.run_query(spark, d, name).collect()
             times.append(round(time.perf_counter() - t0, 4))
